@@ -34,10 +34,12 @@ import json
 import os
 import re
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
+from pyspark.util import inheritable_thread_target
 
 _TS_PATTERN = re.compile(r"\{timestamp:([^}]+)\}")
 
@@ -138,6 +140,128 @@ def _wap_append(
     ) from last
 
 
+_FILE_FORMATS = ("csv", "tsv", "json", "parquet", "orc")
+
+
+def _write_file_format(
+    target: DataFrame, path: str, fmt: str, partition_by: list[str] | None
+) -> None:
+    """Write one plain file format of a stage output."""
+    if fmt in ("csv", "tsv"):
+        target = _stringify_complex(target)
+    if fmt == "tsv":
+        target = _sanitize_tsv(target)
+    writer = target.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    if fmt == "csv":
+        writer.option("header", True).csv(path)
+    elif fmt == "tsv":
+        writer.option("header", True).option("sep", "\t").csv(path)
+    else:
+        # json / parquet / orc (zlib default codec) — the columnar
+        # formats get the same binary-member handling in the ZIP pass
+        getattr(writer, fmt)(path)
+
+
+def _write_versioned(
+    target: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    branch: str | None,
+    constraints: dict[str, str] | None,
+    txn,
+    txn_name: str,
+) -> None:
+    """The ``versioned`` sink: a snapshot table (sinks/versioned.py).
+
+    Each pipeline run APPENDS an atomically-committed, time-travelable
+    snapshot instead of overwriting files in place — the 100 TB-safe
+    form of a recurring stage output. Re-runs accumulate history; read
+    via versioned.read_snapshot. With ``branch`` set, the append goes
+    WRITE-AUDIT-PUBLISH: staged on an ephemeral branch off the named
+    one, then atomically fast-forwarded, so main never shows a torn
+    stage output and a concurrent writer costs one re-stage.
+    """
+    from small_etl_spark.sinks.versioned import (
+        _enforce_constraints,
+        add_constraint,
+        commit_snapshot,
+        list_constraints,
+    )
+
+    missing_cons = {
+        cname: cexpr
+        for cname, cexpr in (constraints or {}).items()
+        if cname not in list_constraints(_local_path(path))
+    }
+    if missing_cons:
+        # declared constraints the table does not carry yet
+        # gate THIS batch too (one agg pass, same as every
+        # later commit_snapshot) — without this the first
+        # run's own batch bypassed the CHECK: a violating
+        # batch landed durably and the add_constraint below
+        # then failed every subsequent run (ADVICE r9)
+        _enforce_constraints(
+            target, {"constraints": missing_cons},
+            "load.constraints(declared)",
+        )
+    if txn is not None and branch:
+        raise ValueError(
+            "load.branch and [sequence] atomic are mutually "
+            "exclusive — the transaction already WAP-stages"
+        )
+    # the root every post-commit action (constraints) targets:
+    # under a transaction that is the txn's staged branch, so
+    # publish adopts the properties atomically with the data
+    croot = _local_path(path)
+    if txn is not None:
+        from small_etl_spark.sinks.versioned import (
+            latest_version,
+        )
+
+        if latest_version(croot) is None:
+            # first run: bootstrap an (empty, schema-carrying)
+            # v0 so the table can stage — the only state a
+            # reader can observe before the catalog swap; the
+            # txn tracks it and drops it again on abort, so an
+            # aborted atomic sequence leaves no new-table
+            # residue (ADVICE r10)
+            commit_snapshot(
+                target.limit(0), croot, mode="overwrite",
+                partition_by=partition_by or None,
+            )
+            txn.register_bootstrap(croot)
+        croot = txn.stage_lazy(txn_name, croot)
+        commit_snapshot(
+            target, croot, mode="append",
+            partition_by=partition_by or None,
+        )
+    elif branch:
+        _wap_append(
+            target, _local_path(path), branch,
+            partition_by=partition_by or None,
+        )
+    else:
+        commit_snapshot(
+            target,
+            _local_path(path),
+            mode="append",
+            partition_by=partition_by or None,
+        )
+    if constraints:
+        # declared once, enforced forever: add any configured
+        # CHECK constraint the table does not carry yet (the
+        # add validates all existing data first); subsequent
+        # runs' batches are then gated inside commit_snapshot
+        have = list_constraints(croot)
+        for cname, cexpr in constraints.items():
+            if cname not in have:
+                add_constraint(
+                    target.sparkSession, croot, cname, cexpr,
+                )
+
+
 def write_outputs(
     df: DataFrame,
     out_dir: str,
@@ -158,124 +282,35 @@ def write_outputs(
     ``col=value`` directories let downstream readers partition-prune —
     a filter on a partition column skips whole directories instead of
     scanning 100 TB (verify via ``PartitionFilters`` in the scan node).
-    Returns {format: path} of the written directories.
+
+    The plain file formats are written concurrently, one thread (and
+    Spark job) per format, inheriting the caller's job group and
+    description; a failed format re-raises its own error once all have
+    finished. ``versioned`` commits afterwards on the calling thread.
+    Returns {format: path} of the written directories, in ``formats``
+    order.
     """
-    out = _sorted_projection(df, sorted_header)
-    written: dict[str, str] = {}
     for fmt in formats:
-        path = os.path.join(out_dir, fmt)
-        target = out.coalesce(1) if single_file and not partition_by else out
-        writer = target.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        if fmt == "csv":
-            writer = _stringify_complex(target).write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.option("header", True).csv(path)
-        elif fmt == "tsv":
-            writer = _sanitize_tsv(_stringify_complex(target)).write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.option("header", True).option("sep", "\t").csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        elif fmt == "parquet":
-            writer.parquet(path)
-        elif fmt == "orc":
-            # second bundled columnar format (zlib default codec) —
-            # same binary-member handling as parquet in the ZIP pass
-            writer.orc(path)
-        elif fmt == "versioned":
-            # snapshot table (sinks/versioned.py): each pipeline run
-            # APPENDS an atomically-committed, time-travelable
-            # snapshot instead of overwriting files in place — the
-            # 100 TB-safe form of a recurring stage output. Re-runs
-            # accumulate history; read via versioned.read_snapshot.
-            # With ``branch`` set, the append goes WRITE-AUDIT-PUBLISH:
-            # staged on an ephemeral branch off the named one, then
-            # atomically fast-forwarded, so main never shows a torn
-            # stage output and a concurrent writer costs one re-stage.
-            from small_etl_spark.sinks.versioned import (
-                _enforce_constraints,
-                add_constraint,
-                commit_snapshot,
-                list_constraints,
-            )
-
-            missing_cons = {
-                cname: cexpr
-                for cname, cexpr in (constraints or {}).items()
-                if cname not in list_constraints(_local_path(path))
-            }
-            if missing_cons:
-                # declared constraints the table does not carry yet
-                # gate THIS batch too (one agg pass, same as every
-                # later commit_snapshot) — without this the first
-                # run's own batch bypassed the CHECK: a violating
-                # batch landed durably and the add_constraint below
-                # then failed every subsequent run (ADVICE r9)
-                _enforce_constraints(
-                    target, {"constraints": missing_cons},
-                    "load.constraints(declared)",
-                )
-            if txn is not None and branch:
-                raise ValueError(
-                    "load.branch and [sequence] atomic are mutually "
-                    "exclusive — the transaction already WAP-stages"
-                )
-            # the root every post-commit action (constraints) targets:
-            # under a transaction that is the txn's staged branch, so
-            # publish adopts the properties atomically with the data
-            croot = _local_path(path)
-            if txn is not None:
-                from small_etl_spark.sinks.versioned import (
-                    latest_version,
-                )
-
-                if latest_version(croot) is None:
-                    # first run: bootstrap an (empty, schema-carrying)
-                    # v0 so the table can stage — the only state a
-                    # reader can observe before the catalog swap; the
-                    # txn tracks it and drops it again on abort, so an
-                    # aborted atomic sequence leaves no new-table
-                    # residue (ADVICE r10)
-                    commit_snapshot(
-                        target.limit(0), croot, mode="overwrite",
-                        partition_by=partition_by or None,
-                    )
-                    txn.register_bootstrap(croot)
-                croot = txn.stage_lazy(txn_name or out_dir, croot)
-                commit_snapshot(
-                    target, croot, mode="append",
-                    partition_by=partition_by or None,
-                )
-            elif branch:
-                _wap_append(
-                    target, _local_path(path), branch,
-                    partition_by=partition_by or None,
-                )
-            else:
-                commit_snapshot(
-                    target,
-                    _local_path(path),
-                    mode="append",
-                    partition_by=partition_by or None,
-                )
-            if constraints:
-                # declared once, enforced forever: add any configured
-                # CHECK constraint the table does not carry yet (the
-                # add validates all existing data first); subsequent
-                # runs' batches are then gated inside commit_snapshot
-                have = list_constraints(croot)
-                for cname, cexpr in constraints.items():
-                    if cname not in have:
-                        add_constraint(
-                            df.sparkSession, croot, cname, cexpr,
-                        )
-        else:
+        if fmt not in _FILE_FORMATS and fmt != "versioned":
             raise ValueError(f"invalid output format {fmt!r}")
-        written[fmt] = path
+    out = _sorted_projection(df, sorted_header)
+    target = out.coalesce(1) if single_file and not partition_by else out
+    written = {fmt: os.path.join(out_dir, fmt) for fmt in formats}
+    file_formats = [fmt for fmt in written if fmt != "versioned"]
+    if file_formats:
+        write = inheritable_thread_target(df.sparkSession)(_write_file_format)
+        with ThreadPoolExecutor(len(file_formats)) as pool:
+            futures = [
+                pool.submit(write, target, written[fmt], fmt, partition_by)
+                for fmt in file_formats
+            ]
+        for fut in futures:
+            fut.result()
+    if "versioned" in written:
+        _write_versioned(
+            target, written["versioned"], partition_by, branch,
+            constraints, txn, txn_name or out_dir,
+        )
     return written
 
 

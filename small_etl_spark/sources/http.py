@@ -13,22 +13,40 @@ Two physical shapes (SURVEY §4):
   over the upstream frame — executor-side clients, per-partition rate
   limiting, Arrow-batched results — so the fan-out scales with
   partitions instead of the reference's sequential 100 ms-sleep loop.
+  Each partition keeps ``FANOUT_DEPTH`` (2) requests in flight, so the
+  server is never idle while the client handles a response; output
+  order is still the input order.
+
+Rate limit contract: ``rate_limit_ms`` spaces request *starts* (every
+attempt, retries included) at least that far apart within a
+partition, i.e. at most ``1000/rate_limit_ms`` requests per second per
+partition whatever the in-flight depth.
+
+Every request opens a fresh connection: keep-alive reuse against a
+server that sends headers and body in separate writes stalls each
+response on Nagle's algorithm meeting the client's delayed ACK, which
+costs far more than a fresh local connect.
 
 Retry with delay implements what the reference only declares
 (``retry_attempts``/``retry_delay_seconds``,
-sequence_config.rs:44-45); ``on_api_failure = "use_sample_data"``
-ports the S7 fallback policy (toml_config.rs:106-110).
+sequence_config.rs:44-45): HTTP errors, timeouts and connections
+dropped without a response are retried, then raise
+:class:`HttpFetchError`. ``on_api_failure = "use_sample_data"`` ports
+the S7 fallback policy (toml_config.rs:106-110).
 """
 
 from __future__ import annotations
 
+import http.client
 import json
+import threading
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
-from typing import Any
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +58,66 @@ from small_etl_spark.functions.templating import (
 
 class HttpFetchError(RuntimeError):
     pass
+
+
+# requests each fan-out partition keeps in flight
+FANOUT_DEPTH = 2
+
+# ``urlopen`` wraps connect errors in URLError but lets errors raised
+# while reading the response (e.g. RemoteDisconnected: the server
+# closed the connection without answering) escape unwrapped.
+_RETRYABLE = (
+    urllib.error.URLError,
+    http.client.HTTPException,
+    ConnectionError,
+    TimeoutError,
+    json.JSONDecodeError,
+)
+
+_T = TypeVar("_T")
+
+
+def _with_retries(
+    call: Callable[[], _T],
+    retry_attempts: int,
+    retry_delay_seconds: float,
+    what: str,
+) -> _T:
+    """Run ``call`` up to ``retry_attempts + 1`` times, sleeping
+    ``retry_delay_seconds`` between attempts; raise
+    :class:`HttpFetchError` once every attempt has failed."""
+    last: Exception | None = None
+    for attempt in range(retry_attempts + 1):
+        try:
+            return call()
+        except _RETRYABLE as e:
+            last = e
+            if attempt < retry_attempts and retry_delay_seconds > 0:
+                time.sleep(retry_delay_seconds)
+    raise HttpFetchError(
+        f"{what} failed after {retry_attempts + 1} attempts: {last!r}"
+    )
+
+
+class _StartPacer:
+    """Spaces the starts of calls from any number of threads at least
+    ``interval_s`` apart. The lock is held while sleeping, and the next
+    start is measured from when the sleeper actually woke, so a late
+    wake-up never shortens the following gap."""
+
+    def __init__(self, interval_s: float):
+        self.interval_s = interval_s
+        self._lock = threading.Lock()
+        self._next = 0.0
+
+    def wait(self) -> None:
+        if self.interval_s <= 0:
+            return
+        with self._lock:
+            delay = self._next - time.monotonic()
+            if delay > 0:
+                time.sleep(delay)
+            self._next = time.monotonic() + self.interval_s
 
 
 def _request(
@@ -79,16 +157,14 @@ def fetch_records(
     """Fetch + parse one endpoint: JSON array → records; single object
     wrapped as ``{"response": obj}`` unless it is already flat
     (simple_pipeline.rs:40-55). Retries for real."""
-    last: Exception | None = None
-    for attempt in range(retry_attempts + 1):
-        try:
-            text = _request(url, method, headers, query_params, payload, timeout_seconds)
-            return parse_json_records(text)
-        except (urllib.error.URLError, TimeoutError, json.JSONDecodeError) as e:
-            last = e
-            if attempt < retry_attempts and retry_delay_seconds > 0:
-                time.sleep(retry_delay_seconds)
-    raise HttpFetchError(f"fetch failed after {retry_attempts + 1} attempts: {last}")
+    return _with_retries(
+        lambda: parse_json_records(
+            _request(url, method, headers, query_params, payload, timeout_seconds)
+        ),
+        retry_attempts,
+        retry_delay_seconds,
+        f"fetch of {url}",
+    )
 
 
 def parse_json_records(text: str) -> list[dict[str, Any]]:
@@ -336,10 +412,18 @@ def parameterized_http_fanout(
 
     ``mapInPandas`` keeps the fan-out partition-parallel (the reference
     loops sequentially with a 100 ms sleep — contextual_pipeline.rs:
-    126-145); the rate limit applies *per partition*, so total QPS =
-    partitions × 1000/rate_limit_ms — repartition the upstream to tune.
-    Endpoint templating errors (X5 unresolved ``{param}``) fail the
-    task like the reference fails the pipeline.
+    126-145), and each partition keeps ``FANOUT_DEPTH`` (2) requests in
+    flight on a small thread pool; rows come out in input order, each
+    ``response`` paired with its own ``source_row``. ``rate_limit_ms``
+    spaces request starts (retries included) within a partition, so a
+    partition sends at most ``1000/rate_limit_ms`` requests per second
+    and total QPS is at most partitions × 1000/rate_limit_ms —
+    repartition the upstream to tune. Connections are not reused:
+    keep-alive against servers that send headers and body separately
+    stalls every response on Nagle + delayed ACK. A key whose
+    ``retry_attempts + 1`` attempts all fail raises
+    :class:`HttpFetchError`. Endpoint templating errors (X5 unresolved
+    ``{param}``) fail the task like the reference fails the pipeline.
 
     With ``response_schema`` set, the raw ``(response, source_row)``
     rows are parsed into real record columns via
@@ -354,33 +438,32 @@ def parameterized_http_fanout(
     hdrs = {k: substitute_template(v, shared) for k, v in (headers or {}).items()}
 
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_resp: list[str] = []
-            out_src: list[str] = []
-            for rec in pdf.to_dict("records"):
-                url = substitute_endpoint_params(endpoint_template, {**shared, **rec})
-                body = (
-                    substitute_template(payload_template, {**shared, **rec})
-                    if payload_template
-                    else None
-                )
-                last: Exception | None = None
-                text = None
-                for attempt in range(retry_attempts + 1):
-                    try:
-                        text = _request(url, method, hdrs, None, body, timeout_seconds)
-                        break
-                    except (urllib.error.URLError, TimeoutError) as e:
-                        last = e
-                        if attempt < retry_attempts and retry_delay_seconds > 0:
-                            time.sleep(retry_delay_seconds)
-                if text is None:
-                    raise HttpFetchError(f"fan-out fetch failed for {url}: {last}")
-                out_resp.append(text)
-                out_src.append(json.dumps(rec, default=str))
-                if rate_limit_ms > 0:
-                    time.sleep(rate_limit_ms / 1000.0)
-            yield pd.DataFrame({"response": out_resp, "source_row": out_src})
+        pacer = _StartPacer(rate_limit_ms / 1000.0)
+
+        def fetch_one(rec: dict[str, Any]) -> str:
+            url = substitute_endpoint_params(endpoint_template, {**shared, **rec})
+            body = (
+                substitute_template(payload_template, {**shared, **rec})
+                if payload_template
+                else None
+            )
+
+            def attempt() -> str:
+                pacer.wait()
+                return _request(url, method, hdrs, None, body, timeout_seconds)
+
+            return _with_retries(
+                attempt, retry_attempts, retry_delay_seconds, f"fan-out fetch of {url}"
+            )
+
+        with ThreadPoolExecutor(FANOUT_DEPTH) as pool:
+            for pdf in batches:
+                recs = pdf.to_dict("records")
+                # map yields in submission order and cancels the
+                # not-yet-started calls when one raises
+                out_resp = list(pool.map(fetch_one, recs))
+                out_src = [json.dumps(rec, default=str) for rec in recs]
+                yield pd.DataFrame({"response": out_resp, "source_row": out_src})
 
     raw = upstream.mapInPandas(fetch_partition, schema=result_schema)
     if response_schema is not None:
